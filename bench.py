@@ -775,23 +775,35 @@ def resolve_contamination(
 # legitimate reading this round was jaccard_verify_lsh at ~15x its
 # tier canary under a host burst (and < 8 s at every core count with
 # a quiet canary), while the pathological readings were ~100x.
+# The ratio gate trusts the canary as the denominator; a sticky state
+# that also slowed the canary (itself Spark codegen) ~4x would pull a
+# 39 s reading under 30x and slip through. Hence an absolute-only
+# backstop: any min above PATHOLOGICAL_CEILING_SEC re-spawns the tier
+# whatever the ratio — twice the slowest min in any committed
+# BENCH_r*.json (15.0 s, minhash_lsh_candidates in BENCH_r02).
 PATHOLOGICAL_ABS_SEC = 8.0
 PATHOLOGICAL_CANARY_RATIO = 30.0
+PATHOLOGICAL_CEILING_SEC = 30.0
 
 
 def pathological_entries(
     queries: dict[str, float], canary: float | None
 ) -> list[str]:
     """Entries whose recorded min bears the pathological-JVM
-    signature (catastrophic AND far outside the ambient band the
-    canary establishes). Pure so the unit test can pin the policy."""
+    signature: catastrophic AND far outside the ambient band the
+    canary establishes, or above the absolute ceiling whatever the
+    canary says. A tier without a recorded canary is never flagged.
+    Pure so the unit test can pin the policy."""
     if not canary or canary <= 0:
         return []
     return sorted(
         n
         for n, v in queries.items()
-        if v > PATHOLOGICAL_ABS_SEC
-        and v > PATHOLOGICAL_CANARY_RATIO * canary
+        if v > PATHOLOGICAL_CEILING_SEC
+        or (
+            v > PATHOLOGICAL_ABS_SEC
+            and v > PATHOLOGICAL_CANARY_RATIO * canary
+        )
     )
 
 
@@ -1070,7 +1082,8 @@ def main() -> None:
             print(
                 f"WARNING: pathological tier JVM suspected "
                 f"(entries >{PATHOLOGICAL_CANARY_RATIO}x tier canary "
-                f"and >{PATHOLOGICAL_ABS_SEC}s): {bad} — re-spawning "
+                f"and >{PATHOLOGICAL_ABS_SEC}s, or "
+                f">{PATHOLOGICAL_CEILING_SEC}s): {bad} — re-spawning "
                 f"tier '{tier}' once in a fresh JVM",
                 file=sys.stderr,
             )

@@ -1356,9 +1356,16 @@ def sq8_gate_margin(
     ‖v/‖v‖ − v̂/‖v̂‖‖ ≤ 2‖v − v̂‖ / max(‖v‖, ‖v̂‖), and by
     Cauchy-Schwarz |cos(q,v) − cos(q,v̂)| is at most that. Taking
     ``min_vnorm`` = the smallest STORED vnorm in the index (≤ every
-    max(‖v‖, ‖v̂‖)) gives the corpus-wide bound 2Δ/min_vnorm. The
-    bound is deliberately not tight — last-ulp differences in how two
-    engines evaluate it cannot make it unsound."""
+    max(‖v‖, ‖v̂‖)) gives the corpus-wide bound 2Δ/min_vnorm — the
+    jvm gate's margin and the worst case ``emb_gate_margin_report``
+    sizes. Since ‖v̂‖ ≤ max(‖v‖, ‖v̂‖) too, each row's own stored
+    vnorm gives the per-row bound 2Δ/‖v̂‖ =
+    ``sq8_gate_margin(mins, maxs, 1.0) / vnorm``, never looser than
+    the global one; the blas gate uses it. The bound is deliberately
+    not tight — last-ulp differences in how two engines evaluate it
+    cannot make it unsound. Neither form covers appended rows whose
+    values were clamped to the stored code rails (see the append
+    caveat in :func:`incremental_semantic_dedup_sq8`)."""
     import math
 
     delta2 = 0.0
@@ -2222,6 +2229,8 @@ def materialize_ivf_index(
     clamp_stats: dict | None = None,
     balance_cell_rows: int | None = None,
     prefix_dims: int | None = None,
+    *,
+    _stored_sq8_bounds: tuple[list, list] | None = None,
 ) -> tuple[DataFrame, list[list[float]]]:
     """Persist the IVF inverted lists: every corpus vector with its
     nearest-centroid ``cell``, hash-BUCKETED on the single ``cell``
@@ -2327,7 +2336,12 @@ def materialize_ivf_index(
         # location-match check
         path = None
         if sq8:
-            mins, maxs = load_sq8_bounds(corpus.sparkSession, table)
+            # a caller that already holds this table's bounds (the
+            # streaming ingest loads them once per micro-batch for
+            # the gate) hands them in instead of a second collect
+            mins, maxs = _stored_sq8_bounds or load_sq8_bounds(
+                corpus.sparkSession, table
+            )
             # same geometry guard as the PQ append path: the stored
             # bounds define dim; a batch with a different vector
             # length would pack null/truncated codes silently
@@ -3192,13 +3206,20 @@ def incremental_semantic_dedup_sq8(
        decision is made on the EXACT cosine >= ``threshold``.
 
     With ``margin=None`` (default) a SOUND margin is derived from the
-    stored bounds and the index's minimum vnorm via
-    :func:`sq8_gate_margin`, making the output IDENTICAL to the
-    exact gate (pinned in tests): stage 1 can only over-approximate
-    the candidate set, and stage 2 is exact. Pass a smaller measured
-    margin to trade a bounded false-negative rate for a shorter
-    shortlist when the sound bound is too loose for the corpus
-    (report the rate with the ``emb_gate_recall`` audit pattern).
+    stored bounds via :func:`sq8_gate_margin`, making the output
+    IDENTICAL to the exact gate (pinned in tests): stage 1 can only
+    over-approximate the candidate set, and stage 2 is exact. The
+    blas path takes it PER ROW, 2Δ/‖v̂‖ from each candidate row's
+    own stored vnorm — never looser than the global bound, so its
+    shortlist is at most the jvm one and no index-wide min(vnorm)
+    pass runs per batch. The jvm path keeps the global
+    2Δ/min‖v̂‖ margin, whose shortlist size is the oracled one
+    (``emb_gate_sq8_stats``). Either way ``emb_gate_margin_report``
+    (the global bound) remains the worst-case sizing. Pass a
+    smaller measured margin (applied uniformly on both paths) to
+    trade a bounded false-negative rate for a shorter shortlist when
+    the sound bound is too loose for the corpus (report the rate
+    with the ``emb_gate_recall`` audit pattern).
     Same-id pairs never count (replay contract), zero-norm batch
     rows are always kept, within-batch duplicates are kept — all as
     in the exact gate. ``index`` is a
@@ -3206,9 +3227,10 @@ def incremental_semantic_dedup_sq8(
     ``centroids``; ``corpus`` is the accepted float corpus used only
     for the recheck.
 
-    Soundness caveat for APPENDED indexes: the margin bound assumes
-    every stored vector lies within the persisted bounds (true by
-    construction for a fresh build — bounds are the corpus min/max).
+    Soundness caveat for APPENDED indexes (per-row and global margin
+    alike): the margin bound assumes every stored vector lies within
+    the persisted bounds (true by construction for a fresh build —
+    bounds are the corpus min/max).
     ``materialize_ivf_index(mode='append')`` clamps out-of-range
     batch values to the stored code rails, and a clamped dimension's
     dequant error can exceed step/2, so a heavily drifted appended
@@ -3241,17 +3263,6 @@ def incremental_semantic_dedup_sq8(
             "index has no 'codes' column — build it with"
             " materialize_ivf_index(sq8=True)"
         )
-    if margin is None:
-        row = index.filter(F.col("vnorm") > 0).agg(
-            F.min("vnorm")
-        ).collect()[0]
-        if row[0] is None:
-            # no scoreable rows: stage 1 yields nothing, but any
-            # degenerate (vnorm<=0) rows still route to the exact
-            # recheck via _degenerate_recon_candidates below
-            margin = 0.0
-        else:
-            margin = sq8_gate_margin(mins, maxs, float(row[0]))
     b = assign_cells(
         batch.select(
             F.col(id_col).alias("b_id"),
@@ -3264,7 +3275,7 @@ def incremental_semantic_dedup_sq8(
         n_probe=n_probe,
         impl=impl,
     )
-    c = index.filter(F.col("vnorm") > 0).select(
+    c = index.select(
         "cell",
         F.col("vec_id").alias("c_id"),
         "codes",
@@ -3280,6 +3291,12 @@ def incremental_semantic_dedup_sq8(
         # incremental_semantic_dedup; numpy summation order can move
         # a borderline candidate by an ulp, which the margin slack
         # absorbs (stage 2 decides exactly either way).
+        #
+        # No index pass rides along the scoring one: the sound margin
+        # is taken per row (2Δ/‖v̂‖ from the row's own stored vnorm —
+        # no index-wide min(vnorm) collect) and degenerate rows
+        # (vnorm <= 0) stay in the scan as unconditional candidates
+        # instead of a second index scan + union.
         import numpy as np
         import pandas as pd
 
@@ -3290,7 +3307,7 @@ def incremental_semantic_dedup_sq8(
         dim = len(mins)
         w_idx = np.arange(dim) // _SQ8_PER_WORD
         shifts = (np.arange(dim) % _SQ8_PER_WORD) * 8
-        thr = threshold - margin
+        unit_margin = sq8_gate_margin(mins, maxs, 1.0)
         c_g, b_g, keys = _salt_cell_blocks(
             c, b, "c_id", "cell", max_cell_rows
         )
@@ -3310,6 +3327,14 @@ def incremental_semantic_dedup_sq8(
             codes = (words[:, w_idx] >> shifts) & 255
             recon = mins_a + (codes.astype(np.float64) + 0.5) * steps_a
             cn = cpdf["c_norm"].values.astype(np.float64)
+            # degenerate rows: no defined approximate cosine, so they
+            # pass stage 1 unconditionally (stage 2 decides on the
+            # real float vector); a safe divisor keeps sims NaN-free
+            deg = ~(cn > 0)
+            cn = np.where(deg, 1.0, cn)
+            thr = threshold - (
+                unit_margin / cn if margin is None else margin
+            )
             cids = cpdf["c_id"].values
             bids_all = bpdf["b_id"].values
             outs = []
@@ -3323,7 +3348,7 @@ def incremental_semantic_dedup_sq8(
                 )
                 bids = bids_all[lo : lo + step]
                 sims = (bm @ recon.T) / np.outer(bn, cn)
-                mask = (sims >= thr) & (
+                mask = ((sims >= thr) | deg) & (
                     bids[:, None] != cids[None, :]
                 )
                 bi, ci = np.nonzero(mask)
@@ -3345,6 +3370,18 @@ def incremental_semantic_dedup_sq8(
             .distinct()
         )
     else:
+        if margin is None:
+            row = index.filter(F.col("vnorm") > 0).agg(
+                F.min("vnorm")
+            ).collect()[0]
+            if row[0] is None:
+                # no scoreable rows: stage 1 yields nothing, but any
+                # degenerate (vnorm<=0) rows still route to the exact
+                # recheck via _degenerate_recon_candidates below
+                margin = 0.0
+            else:
+                margin = sq8_gate_margin(mins, maxs, float(row[0]))
+        c = c.filter(F.col("c_norm") > 0)
         approx_cos = _sq8_dequant_dot("b_vec", "codes", mins, maxs) / (
             F.col("b_norm") * F.col("c_norm")
         )
@@ -3357,7 +3394,7 @@ def incremental_semantic_dedup_sq8(
             .select("b_id", "c_id")
             .distinct()
         )
-    cand = _degenerate_recon_candidates(index, b, cand)
+        cand = _degenerate_recon_candidates(index, b, cand)
     return _exact_gate_recheck(
         batch, corpus, cand, id_col, vec_col, threshold,
         pushdown_candidate_ids, gate_stats=gate_stats,

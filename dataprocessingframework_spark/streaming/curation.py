@@ -32,14 +32,23 @@ from pyspark.sql import functions as F
 from dataprocessingframework_spark.streaming.ingest import _committed_batches
 
 
+def _has_data(fs, path) -> bool:
+    """Whether a batch directory holds any data file. A micro-batch
+    whose rows were ALL filtered or deduped away writes only a
+    _SUCCESS marker, and ``spark.read.parquet`` fails on a part-less
+    directory."""
+    return any(
+        not f.getPath().getName().startswith(("_", "."))
+        for f in fs.listStatus(path)
+    )
+
+
 def _batch_dirs(
     spark: SparkSession, corpus_dir: str, exclude: str | None = None
 ) -> list[str]:
     """Existing ``batch-*`` subdirectories of the corpus (Hadoop FS, so
     any supported scheme works), minus ``exclude``. Directories with no
-    data files are skipped: a micro-batch whose rows were ALL filtered
-    or deduped away writes only a _SUCCESS marker, and
-    ``spark.read.parquet`` fails on a part-less directory."""
+    data files are skipped (see :func:`_has_data`)."""
     jvm = spark._jvm
     path = jvm.org.apache.hadoop.fs.Path(corpus_dir)
     fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -52,11 +61,7 @@ def _batch_dirs(
             status.isDirectory() and name.startswith("batch-") and name != exclude
         ):
             continue
-        has_data = any(
-            not f.getPath().getName().startswith(("_", "."))
-            for f in fs.listStatus(status.getPath())
-        )
-        if has_data:
+        if _has_data(fs, status.getPath()):
             # Full URI (scheme + authority), not just the path part:
             # with a non-default filesystem (s3a:// corpus on an HDFS
             # defaultFS) a bare path would resolve against the wrong
@@ -108,12 +113,16 @@ def _index_source(
     ``spark.read.parquet`` rejects)."""
     if not use_index:
         return read_corpus(spark, corpus_dir)
-    cur = [
-        d
-        for d in _batch_dirs(spark, corpus_dir)
-        if d.rstrip("/").endswith(f"batch-{batch_id}")
-    ]
-    return spark.read.parquet(cur[0]) if cur else None
+    # check the one directory directly — listing every batch dir
+    # would cost O(batches) filesystem calls per micro-batch
+    path = spark._jvm.org.apache.hadoop.fs.Path(
+        f"{corpus_dir.rstrip('/')}/batch-{batch_id}"
+    )
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not (fs.isDirectory(path) and _has_data(fs, path)):
+        return None
+    # qualified URI, as _batch_dirs returns (non-default filesystems)
+    return spark.read.parquet(str(fs.makeQualified(path).toString()))
 
 
 def incremental_curation(
@@ -469,6 +478,7 @@ def incremental_semantic_ingest(
     from dataprocessingframework_spark.operators.similarity import (
         balance_centroids,
         incremental_semantic_dedup,
+        load_sq8_bounds,
         materialize_ivf_index,
         materialize_pq_index,
         rebalance_trigger,
@@ -583,6 +593,13 @@ def incremental_semantic_ingest(
             index_table is not None
             and spark.catalog.tableExists(index_table)
         )
+        # the SQ8 sidecar is read ONCE per micro-batch: the gate and
+        # the index append below both use these bounds
+        sq8_bounds = (
+            load_sq8_bounds(spark, index_table)
+            if use_index and state["rung"] == "sq8"
+            else None
+        )
         if use_index:
             # ONE gate entry point across the ladder (r12): the
             # explicit gate_kind also validates that the index's
@@ -608,6 +625,7 @@ def incremental_semantic_ingest(
                 state["cents"],
                 gate_kind=kind,
                 index_table=index_table,
+                sq8_bounds=sq8_bounds,
                 prefix_dims=state["prefix_dims"],
                 id_col=id_col, vec_col=vec_col,
                 threshold=threshold, n_probe=n_probe, impl=impl,
@@ -698,6 +716,7 @@ def incremental_semantic_ingest(
                         sq8=eff_sq8,
                         clamp_stats=cstats,
                         prefix_dims=state["prefix_dims"],
+                        _stored_sq8_bounds=sq8_bounds,
                     )
                     rebuilt = False
                     if (

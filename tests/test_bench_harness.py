@@ -8,6 +8,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import (  # noqa: E402
     CONTAMINATION_SPREAD,
+    PATHOLOGICAL_CEILING_SEC,
     TIERS,
     bench_queries,
     merge_tier_results,
@@ -65,6 +66,28 @@ def test_pathological_jvm_guard_policy():
     # no canary recorded (or zero) -> never fires
     assert pathological_entries({"x": 100.0}, None) == []
     assert pathological_entries({"x": 100.0}, 0.0) == []
+
+
+def test_pathological_jvm_guard_absolute_ceiling():
+    """ADVICE r17 item 3: a sticky JVM that ALSO slows the canary
+    hides under the 30x ratio (39.1 s over a 4x-slowed 1.53 s canary
+    is only 26x). Above the absolute ceiling the tier re-spawns
+    whatever the ratio; at or below it the ratio gate still rules."""
+    assert PATHOLOGICAL_CEILING_SEC == 30.0
+    slow_canary = 1.53
+    assert pathological_entries(
+        {"text_remove_dup_spans": 39.1, "cc_clusters_star": 9.9},
+        slow_canary,
+    ) == ["text_remove_dup_spans"]
+    # the boundary: strictly above the ceiling fires, at it does not
+    assert pathological_entries({"x": 30.001}, slow_canary) == ["x"]
+    assert pathological_entries({"x": 30.0}, slow_canary) == []
+    # under the ceiling, a high-ratio reading still fires via the
+    # ratio gate, a low-ratio one does not
+    assert pathological_entries({"x": 29.0}, 0.5) == ["x"]
+    assert pathological_entries({"x": 29.0}, 1.0) == []
+    # no canary recorded: the guard stays off, ceiling included
+    assert pathological_entries({"x": 100.0}, None) == []
 
 
 def test_merge_tier_results_keeps_both_legs():

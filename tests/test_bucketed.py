@@ -1207,6 +1207,96 @@ def test_sq8_compressed_gate_equals_exact_gate(spark, sf_dir, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+def test_sq8_blas_gate_routes_degenerate_rows(spark, sf_dir, tmp_path):
+    """The blas SQ8 stage 1 is one index pass: its margin is per row
+    (2Δ/‖v̂‖, never looser than the jvm path's global 2Δ/min‖v̂‖) and
+    degenerate rows (vnorm <= 0) pass it unconditionally inside the
+    cogroup instead of through a second index scan. Both engines must
+    keep exactly the exact gate's set over an index where a third of
+    the rows are degenerate — with zeroed codes, so stage 1 cannot
+    score them — and the blas shortlist must never exceed the jvm
+    one."""
+    from dataprocessingframework_spark.operators.similarity import (
+        _ivf_centroids,
+        incremental_semantic_dedup,
+        incremental_semantic_dedup_sq8,
+        load_sq8_bounds,
+        materialize_ivf_index,
+    )
+    from dataprocessingframework_spark.queries import (
+        _perturbed_gate_batch,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    corpus = emb.select(
+        "vec_id",
+        F.col("embedding").cast("array<double>").alias("embedding"),
+    )
+    n = corpus.count()
+    batch = _perturbed_gate_batch(emb, n).cache()
+    cents = _ivf_centroids(corpus, "vec_id", "embedding", 16, iters=0)
+    is_deg = F.col("vec_id") % 3 == 0
+    try:
+        idx, _ = materialize_ivf_index(
+            corpus, "t_gate_sq8_deg", n_cells=16, iters=0, impl="jvm",
+            centroids=cents, num_buckets=16,
+            path=str(tmp_path / "gsq8d"), sq8=True,
+        )
+        bounds = load_sq8_bounds(spark, "t_gate_sq8_deg")
+        deg_idx = idx.select(
+            "cell",
+            "vec_id",
+            F.when(
+                is_deg,
+                F.expr("array_repeat(CAST(0 AS BIGINT), size(codes))"),
+            ).otherwise(F.col("codes")).alias("codes"),
+            F.when(is_deg, F.lit(0.0)).otherwise(F.col("vnorm")).alias(
+                "vnorm"
+            ),
+        )
+        assert deg_idx.filter(~(F.col("vnorm") > 0)).count() > 0
+
+        def kept(df):
+            return sorted(r.vec_id for r in df.collect())
+
+        exact = kept(
+            incremental_semantic_dedup(
+                batch, corpus, cents, threshold=0.95, n_probe=2
+            )
+        )
+        assert 0 < len(exact) < batch.count()
+        # the degenerate rows really are drop witnesses: without them
+        # the exact gate keeps more, so skipping them would show
+        without = kept(
+            incremental_semantic_dedup(
+                batch, corpus.filter(~is_deg), cents,
+                threshold=0.95, n_probe=2,
+            )
+        )
+        assert set(exact) < set(without)
+        for index in (idx, deg_idx):
+            shortlist = {}
+            for impl in ("jvm", "blas"):
+                st: dict = {}
+                got = kept(
+                    incremental_semantic_dedup_sq8(
+                        batch, corpus, cents, index, bounds,
+                        threshold=0.95, n_probe=2, impl=impl,
+                        gate_stats=st,
+                    )
+                )
+                assert got == exact, (impl, len(got), len(exact))
+                shortlist[impl] = st["stage1_candidates"]
+            assert 0 < shortlist["blas"] <= shortlist["jvm"], shortlist
+    finally:
+        batch.unpersist()
+        for t in ("t_gate_sq8_deg", "t_gate_sq8_deg_centroids",
+                  "t_gate_sq8_deg_sq8"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_pq_compressed_gate_equals_exact_gate(spark, sf_dir, tmp_path):
     """r11: the PQ gate's PER-ROW sound margin (2*resid/vnorm, resid
     stored at encode time) must make the two-stage compressed gate
